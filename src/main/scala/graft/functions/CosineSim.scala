@@ -203,10 +203,11 @@ object GraftFunctions {
   * portable declarative cosine (aggregate∘zip_with) into the fused
   * native expression with no source change — the Rule[LogicalPlan]
   * rung of SURVEY.md §4.2's extension ladder. Nothing else is
-  * injected: no custom Strategy/LogicalPlan is on the critical path
-  * (deliberate — each would carry a maintenance + correctness burden
-  * with no measured win; the built-in operators express everything
-  * else the engine needs).
+  * injected here. One custom Strategy IS on the critical path, but
+  * not through this class: the `topk_per_key` query plans
+  * [[graft.plans.TopKPerKeyStrategy]] via `TopKOps.ensureStrategy`, which
+  * appends the strategy to the running session's
+  * `experimental.extraStrategies` when that query first runs.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {

@@ -330,7 +330,7 @@ object Dedup {
   /** The landed tombstone ids as a fresh store read — exposed so the
     * spec can pin |tombstones| ∝ batch. */
   private[graft] def lshTombStore(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(lshTombRoot(s, d))
+    Tables.parquet(s, lshTombRoot(s, d))
 
   /** MinHash-LSH candidate pairs with tombstone MASKING — the
     * signature store's REMOVE verb (the bm25_delete contract applied
@@ -370,7 +370,7 @@ object Dedup {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
@@ -409,7 +409,7 @@ object Dedup {
   private[graft] def lshPurgedStore(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val root = lshPurgeRoot(s, d)
-    (s.read.parquet(s"$root/sig"), s.read.parquet(s"$root/banded"))
+    (Tables.parquet(s, s"$root/sig"), Tables.parquet(s, s"$root/banded"))
   }
 
   /** MinHash-LSH pairs from the PURGED signature store — the delete
@@ -440,7 +440,7 @@ object Dedup {
           .write.mode("overwrite").parquet(out)
         out
       })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
@@ -782,11 +782,11 @@ object Dedup {
       val out = graft.Scratch.processScoped("graft_simhash",
         s"p${simhashPairIds.getAndIncrement()}_h${maxHam}_b$maxBucket")
         .toString
-      simhashPairsFrom(s.read.parquet(simhashSigRoot(s, d)), maxHam,
+      simhashPairsFrom(Tables.parquet(s, simhashSigRoot(s, d)), maxHam,
         maxBucket).write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
@@ -894,7 +894,7 @@ object Dedup {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
@@ -968,7 +968,7 @@ object Dedup {
       val mhStar = tag(degenerateStars(
         st.banded(s).select("doc_id", "band", "bucket"), t), 1, 0, 0, 1)
       val smStar = tag(degenerateStars(
-        simhashBandedFrom(s.read.parquet(simhashSigRoot(s, d)))
+        simhashBandedFrom(Tables.parquet(s, simhashSigRoot(s, d)))
           .select("doc_id", "band", "bucket"), t), 0, 1, 0, 1)
       val mhPairs = tag(SigStore.lshPairs(s, d, maxBucket = t)
         .select("doc_a", "doc_b"), 1, 0, 0, 0)
@@ -990,11 +990,28 @@ object Dedup {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
   val IncrEvery = 10
+
+  /** A landed incremental store and its hot-bucket lists, one per
+    * `maxBucket`: the store never changes once landed, so the list is
+    * collected once instead of by every probe. */
+  final class IncrStore(val root: String) {
+    private val hot =
+      new java.util.concurrent.ConcurrentHashMap[Int, Seq[(Int, Long)]]()
+    /** (band, bucket) pairs holding more than `maxBucket` documents,
+      * counted over store ∪ batch (the rows with an is_batch value). */
+    def hotBuckets(s: SparkSession, maxBucket: Int): Seq[(Int, Long)] =
+      hot.computeIfAbsent(maxBucket, _ =>
+        Tables.parquet(s, s"$root/banded").filter(col("is_batch").isNotNull)
+          .groupBy("band", "bucket")
+          .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
+          .select("band", "bucket")
+          .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq)
+  }
 
   /** Incremental near-dup: a NEW BATCH (doc_id % IncrEvery == 0 —
     * today's crawl) scored against a materialized SIGNATURE STORE of
@@ -1014,10 +1031,11 @@ object Dedup {
     * landed parquet is the recurrent path, and the spec pins that the
     * probe plan contains no documents scan. The hot-bucket cap uses
     * store-∪-batch bucket counts — identical semantics to the full
-    * cap; a production store maintains the per-bucket counts
-    * incrementally (they are exactly the store's bucket sizes). */
+    * cap — collected once per store and cap; a production store
+    * maintains the per-bucket counts incrementally (they are exactly
+    * the store's bucket sizes). */
   private val incrStores =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new java.util.concurrent.ConcurrentHashMap[String, IncrStore]()
   /** Build counter — exposed so DedupSpec can pin build-once. */
   private[graft] val incrBuildCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
@@ -1029,7 +1047,7 @@ object Dedup {
     // family's artifacts: the previous form re-wrote both parquet
     // halves on EVERY call, paying the store build in what is supposed
     // to be the recurrent-cost measurement (1.54 s → store-read shape).
-    val root = incrStores.computeIfAbsent(d, _ => {
+    val store = incrStores.computeIfAbsent(d, _ => {
       incrBuildCount.incrementAndGet()
       val out = graft.Scratch.processScoped("graft_incr",
         s"store_${lshEpoch.getAndIncrement()}").toString
@@ -1045,9 +1063,9 @@ object Dedup {
       st.sig(s).withColumn("is_batch", isBatch)
         .write.mode("overwrite").partitionBy("is_batch")
         .parquet(s"$out/sig")
-      out
+      new IncrStore(out)
     })
-    dedupIncrementalProbe(s, root, minEst, maxBucket)
+    dedupIncrementalProbe(s, store, minEst, maxBucket)
       .transform(Present.sortedUnbounded(_, col("doc_a"), col("doc_b")))
   }
 
@@ -1056,20 +1074,17 @@ object Dedup {
     * Batch bands join store bands (cross pairs, either id order) plus
     * the batch self-join; signatures re-attach after the narrow
     * id-pair distinct, as in minhashLshFrom. */
-  def dedupIncrementalProbe(s: SparkSession, root: String,
+  def dedupIncrementalProbe(s: SparkSession, store: IncrStore,
                             minEst: Double, maxBucket: Int): DataFrame = {
     import s.implicits._
     // partition-column type inference covers numerics/dates, NOT
     // booleans — is_batch reads back as the string "true"/"false";
     // string equality still partition-prunes
-    val bandedAll = s.read.parquet(s"$root/banded")
+    val bandedAll = Tables.parquet(s, s"${store.root}/banded")
     val storeB = bandedAll.filter(col("is_batch") =!= "true").drop("is_batch")
     val batchB = bandedAll.filter(col("is_batch") === "true").drop("is_batch")
-    val allSig = s.read.parquet(s"$root/sig").drop("is_batch")
-    val hotRows = storeB.unionByName(batchB).groupBy("band", "bucket")
-      .agg(count(lit(1)).as("n")).filter(col("n") > maxBucket)
-      .select("band", "bucket")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    val allSig = Tables.parquet(s, s"${store.root}/sig").drop("is_batch")
+    val hotRows = store.hotBuckets(s, maxBucket)
     def capped(df: DataFrame): DataFrame =
       if (hotRows.isEmpty) df
       else df.join(broadcast(hotRows.toDF("band", "bucket")),

@@ -3,6 +3,7 @@ package graft.operators
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables
 
 /** Session-scoped MATERIALIZED SIGNATURE STORE for the MinHash/LSH
   * dedup family.
@@ -50,11 +51,12 @@ object SigStore {
 
   /** Handle over the landed artifacts; DataFrames are fresh parquet
     * reads bound to the CALLER's session (the cache holds only
-    * paths, so sessions across test suites interoperate). */
+    * paths, so sessions across test suites interoperate), through
+    * `Tables.parquet`, so a re-read starts no schema-inference job. */
   final case class Store(root: String) {
-    def shingles(s: SparkSession): DataFrame = s.read.parquet(s"$root/shingles")
-    def sig(s: SparkSession): DataFrame      = s.read.parquet(s"$root/sig")
-    def banded(s: SparkSession): DataFrame   = s.read.parquet(s"$root/banded")
+    def shingles(s: SparkSession): DataFrame = Tables.parquet(s, s"$root/shingles")
+    def sig(s: SparkSession): DataFrame      = Tables.parquet(s, s"$root/sig")
+    def banded(s: SparkSession): DataFrame   = Tables.parquet(s, s"$root/banded")
   }
 
   /** The store for a dataset dir, building it on first request. */
@@ -70,9 +72,9 @@ object SigStore {
       s"s${ids.getAndIncrement()}").toString
     Dedup.cappedShingles(s, d, maxDf)
       .write.mode("overwrite").parquet(s"$root/shingles")
-    Dedup.minhashSignaturesMd5From(s.read.parquet(s"$root/shingles"))
+    Dedup.minhashSignaturesMd5From(Tables.parquet(s, s"$root/shingles"))
       .write.mode("overwrite").parquet(s"$root/sig")
-    Dedup.bandedFrom(s.read.parquet(s"$root/sig"))
+    Dedup.bandedFrom(Tables.parquet(s, s"$root/sig"))
       .write.mode("overwrite").parquet(s"$root/banded")
     root
   }
@@ -93,7 +95,7 @@ object SigStore {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   private val lshVerified =
@@ -123,7 +125,7 @@ object SigStore {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 
   /** Landed EXACT-Jaccard near-dup pair graph — the verified pair set
@@ -146,6 +148,6 @@ object SigStore {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(path)
+    Tables.parquet(s, path)
   }
 }

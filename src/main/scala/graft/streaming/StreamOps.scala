@@ -23,19 +23,14 @@ object StreamOps {
 
   /** readStream needs an explicit schema; hard-coding one broke when
     * the testdata regenerated with a different physical `ts` type, so
-    * probe it from the actual file footers with a one-off batch read
-    * (driver-side metadata only — no data scan). `Tables.normalizeTs`
+    * probe it from the actual file footers (`Tables.parquetSchema`:
+    * once per file identity and read settings, so the 4 join gates'
+    * two event streams each re-probe nothing). `Tables.normalizeTs`
     * then maps whatever physical layout arrived onto TimestampType,
     * failing loud on an unknown one. */
-  private val probedSchemas =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
   private[graft] def probeRawSchema(s: SparkSession, srcDir: String): StructType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // footer metadata is immutable per staged dir — probe once per
-    // JVM; the 4 join gates each build TWO event streams, so the
-    // driver otherwise re-reads the same footers ~20× per bench pass
-    probedSchemas.computeIfAbsent(srcDir, d => s.read.parquet(d).schema)
+    Tables.parquetSchema(s, srcDir)
   }
 
   /** Streaming source over the events parquet data. The file stream
@@ -68,7 +63,7 @@ object StreamOps {
     * normalization; schema probed from the footers like events. */
   private[graft] def docsStream(s: SparkSession, dir: String): DataFrame = {
     val src = streamableDir(dir, "documents.parquet")
-    s.readStream.schema(s.read.parquet(src).schema).parquet(src)
+    s.readStream.schema(Tables.parquetSchema(s, src)).parquet(src)
   }
 
   /** The raw-schema events file stream over an explicit directory.
@@ -122,12 +117,33 @@ object StreamOps {
     p.toString
   }
 
+  /** A drain's parquet sink, read back with the schema of the
+    * DataFrame that last wrote it, so the read-back starts no
+    * schema-inference job. (A sink is rewritten by every drain, so a
+    * memo keyed on its files, like `Tables.parquet`, would never hit.)
+    * A drain that wrote nothing reads plainly. */
+  private final class Sink(val path: String) {
+    private val written =
+      new java.util.concurrent.atomic.AtomicReference[StructType]()
+    def write(df: DataFrame, mode: String): Unit = {
+      df.write.mode(mode).parquet(path)
+      written.set(df.schema)
+    }
+    def read(s: SparkSession): DataFrame = readAs(s, path, Option(written.get))
+  }
+
+  private def readAs(s: SparkSession, path: String,
+                     schema: Option[StructType]): DataFrame =
+    schema.fold(s.read)(s.read.schema).parquet(path)
+
   /** Local-run state sizing: every stateful op instantiates one state
-    * store per shuffle partition per micro-batch, so the session-wide
-    * 32 partitions mean 32 RocksDB instances of fixed overhead for a
-    * 33-row result. The gated runners drop to 4 for the duration of
-    * the drain — a LOCAL cost knob only; on a real cluster the state
-    * op wants one partition per core like any other shuffle. */
+    * store per shuffle partition per micro-batch, and the bench and
+    * spec sessions run one shuffle partition per core (`nproc`), so a
+    * many-core host would pay that many RocksDB instances of fixed
+    * overhead for a 33-row result. The gated runners cap it at 4 for
+    * the duration of the drain — a LOCAL cost knob only; on a real
+    * cluster the state op wants one partition per core like any other
+    * shuffle. */
   private def withLowShufflePartitions[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
@@ -190,7 +206,7 @@ object StreamOps {
   private def runToTable(s: SparkSession, stream: => DataFrame,
                          tag: String, sortCols: Column*): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val sink = freshDir(tag, "sink")
+    val sink = new Sink(freshDir(tag, "sink"))
     val ckpt = freshDir(tag, "ckpt")
     withLowShufflePartitions(s) { withRocksDb(s) {
       val q = stream.writeStream
@@ -198,12 +214,12 @@ object StreamOps {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.write.mode("overwrite").parquet(sink)
+          sink.write(batch, "overwrite")
         }
         .start()
       q.awaitTermination()
     } }
-    s.read.parquet(sink)
+    sink.read(s)
       .transform(graft.operators.Present.sortedUnbounded(_, sortCols: _*))
   }
 
@@ -246,7 +262,7 @@ object StreamOps {
   private def runToTableAppend(s: SparkSession, stream: => DataFrame,
                                tag: String, sortCols: Column*): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val sink = freshDir(tag, "sink")
+    val sink = new Sink(freshDir(tag, "sink"))
     val ckpt = freshDir(tag, "ckpt")
     withLowShufflePartitions(s) { withRocksDb(s) {
       val q = stream.writeStream
@@ -254,12 +270,12 @@ object StreamOps {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode(if (id == 0) "overwrite" else "append").parquet(sink)
+          sink.write(batch, if (id == 0) "overwrite" else "append")
         }
         .start()
       q.awaitTermination()
     } }
-    s.read.parquet(sink)
+    sink.read(s)
       .transform(graft.operators.Present.sortedUnbounded(_, sortCols: _*))
   }
 
@@ -575,7 +591,7 @@ object StreamOps {
   private[graft] def runToTableUpdate(s: SparkSession, stream: => DataFrame,
                                       tag: String, keyCols: Column*): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val sink = freshDir(tag, "sink")
+    val sink = new Sink(freshDir(tag, "sink"))
     val ckpt = freshDir(tag, "ckpt")
     withLowShufflePartitions(s) { withRocksDb(s) {
       val q = stream.writeStream
@@ -583,15 +599,15 @@ object StreamOps {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.withColumn("__batch", lit(id))
-            .write.mode(if (id == 0) "overwrite" else "append").parquet(sink)
+          sink.write(batch.withColumn("__batch", lit(id)),
+            if (id == 0) "overwrite" else "append")
         }
         .start()
       q.awaitTermination()
     } }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keyCols: _*).orderBy(col("__batch").desc)
-    s.read.parquet(sink)
+    sink.read(s)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn", "__batch")
       .transform(graft.operators.Present.sortedUnbounded(_, keyCols: _*))
@@ -625,8 +641,7 @@ object StreamOps {
   def streamUpsertGated(s: SparkSession, dir: String): DataFrame = {
     val snap = freshDir("stream_upsert", "sink")
     val ckpt = freshDir("stream_upsert", "ckpt")
-    runUpsert(s, eventsStream(s, dir), snap, ckpt)
-    s.read.parquet(snap)
+    readAs(s, snap, runUpsert(s, eventsStream(s, dir), snap, ckpt))
       .transform(graft.operators.Present.sortedUnbounded(_,
         col("user_id"), col("event_type")))
   }
@@ -636,20 +651,25 @@ object StreamOps {
     * crash-recovery case) can stop and later RESUME the same
     * snapshot+checkpoint pair against a source that grew in between —
     * the file-source offsets in `ckpt` make the second drain process
-    * only the unseen files. */
+    * only the unseen files. Returns the schema of the last snapshot
+    * written, None when no batch ran. */
   private[graft] def runUpsert(s: SparkSession, source: DataFrame,
-                               snap: String, ckpt: String): Unit = {
+                               snap: String, ckpt: String): Option[StructType] = {
     import org.apache.spark.sql.streaming.Trigger
+    val written = new java.util.concurrent.atomic.AtomicReference[StructType]()
     withLowShufflePartitions(s) { withRocksDb(s) {
       val q = source
         .writeStream
         .outputMode("append")
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .foreachBatch(upsertBatch(snap) _)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          written.set(upsertBatch(snap)(batch, id))
+        }
         .start()
       q.awaitTermination()
     } }
+    Option(written.get)
   }
 
   /** One micro-batch of the CDC merge. Idempotent: the newer-wins
@@ -660,8 +680,9 @@ object StreamOps {
     * snapshot is renamed aside, never deleted before its replacement
     * lands). The bootstrap condition is "no snapshot
     * written yet", NOT batch id 0 — after a restart the replayed
-    * first batch must MERGE into the snapshot it already wrote. */
-  private[graft] def upsertBatch(snap: String)(batch: DataFrame, id: Long): Unit = {
+    * first batch must MERGE into the snapshot it already wrote.
+    * Returns the schema of the snapshot it wrote. */
+  private[graft] def upsertBatch(snap: String)(batch: DataFrame, id: Long): StructType = {
     // batch-local compaction first: one row per key
     val changes = batch
       .groupBy("user_id", "event_type")
@@ -689,13 +710,16 @@ object StreamOps {
       val f = new java.io.File(snap)
       f.exists() && f.listFiles() != null && f.listFiles().nonEmpty
     }
+    // the bootstrap snapshot; its schema is every snapshot's schema,
+    // so the merge reads the previous one without inferring it
+    val fresh = changes.select(
+      col("ck_user").as("user_id"), col("ck_type").as("event_type"),
+      col("c_event_id").as("last_event_id"),
+      col("c_ts").as("last_ts"), col("c_value").as("last_value"))
     val merged =
-      if (!snapHasData) changes.select(
-        col("ck_user").as("user_id"), col("ck_type").as("event_type"),
-        col("c_event_id").as("last_event_id"),
-        col("c_ts").as("last_ts"), col("c_value").as("last_value"))
+      if (!snapHasData) fresh
       else {
-        val cur = batch.sparkSession.read.parquet(snap)
+        val cur = readAs(batch.sparkSession, snap, Some(fresh.schema))
         cur.join(changes,
             col("user_id") === col("ck_user") &&
               col("event_type") === col("ck_type"), "full_outer")
@@ -736,7 +760,7 @@ object StreamOps {
         throw e
     }
     if (java.nio.file.Files.exists(pp)) deleteRecursively(pp)
-    ()
+    merged.schema
   }
 
   private def deleteRecursively(p: java.nio.file.Path): Unit = {

@@ -8,16 +8,14 @@ import graft.sources.TextSources
   * `Master/testMaster.py:11-12`'s commented invocation, made real). */
 class RunMapRedSpec extends SparkSpec {
 
-  private val refData = "/root/reference/Master/Data"
-
   test("run_mapred InvertedIndex on the reference corpus dir") {
-    val out = MapReduce.runMapRed(spark, s"$refData/TestInverted",
+    val out = MapReduce.runMapRed(spark, s"$fixtureDir/TestInverted",
       "InvertedIndexMapper", "InvertedIndexReducer")
     val rows = out.collect()
     assert(rows.nonEmpty)
     // must agree with the native column pipeline on the same input
     val native = TextOps.tokenize(
-      TextSources.directory(spark, s"$refData/TestInverted")
+      TextSources.directory(spark, s"$fixtureDir/TestInverted")
         .withColumnRenamed("file", "doc_id"))
       .groupBy("word", "doc_id").count().collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -26,7 +24,7 @@ class RunMapRedSpec extends SparkSpec {
   }
 
   test("run_mapred WordCount on the single reference file") {
-    val out = MapReduce.runMapRed(spark, s"$refData/test.txt",
+    val out = MapReduce.runMapRed(spark, s"$fixtureDir/test.txt",
       "WordCountMapper", "WordCountReducer").collect()
     assert(out.nonEmpty)
     assert(out.forall(_.getString(1) == ""), "wordcount emits no doc column")

@@ -4,46 +4,44 @@ import graft.sources.TextSources
 import graft.operators.TextOps
 import org.apache.spark.sql.functions._
 
-/** Reference-fixture E2E (SURVEY.md §5.2): run WordCount on the
-  * reference's own test.txt and InvertedIndex on its TestInverted
-  * corpus (read-only fixtures), cross-checked against an independent
-  * in-test Scala count. */
+/** Reference-layout E2E (SURVEY.md §5.2): run WordCount on a
+  * test.txt and InvertedIndex on a TestInverted corpus laid out like
+  * the reference's data (hand-written fixtures in src/test/resources),
+  * cross-checked against an independent in-test Scala count. */
 class SourcesSpec extends SparkSpec {
-
-  private val refData = "/root/reference/Master/Data"
 
   private def scalaTokens(text: String): Seq[String] =
     text.toLowerCase.split("[^\\p{L}]+").filter(_.nonEmpty).toSeq
 
   test("S1 directory scan: one row per file, provenance kept") {
-    val df = TextSources.directory(spark, s"$refData/TestInverted")
+    val df = TextSources.directory(spark, s"$fixtureDir/TestInverted")
     val files = df.select("file").collect().map(_.getString(0)).sorted
     assert(files.toSeq == Seq("1.txt", "2.txt", "3.txt", "4.txt"))
   }
 
   test("wordcount on reference test.txt matches independent count") {
     import spark.implicits._
-    val df = TextSources.file(spark, s"$refData/test.txt")
+    val df = TextSources.file(spark, s"$fixtureDir/test.txt")
       .withColumnRenamed("file", "doc_id")
     val sparkCounts = TextOps.tokenize(df, idCol = "doc_id")
       .groupBy("word").count()
       .as[(String, Long)].collect().toMap
     val raw = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$refData/test.txt")), "UTF-8")
+      java.nio.file.Paths.get(s"$fixtureDir/test.txt")), "UTF-8")
     val expected = scalaTokens(raw).groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(sparkCounts == expected)
   }
 
   test("inverted index on reference TestInverted (Portuguese unicode fixture)") {
     import spark.implicits._
-    val df = TextSources.directory(spark, s"$refData/TestInverted")
+    val df = TextSources.directory(spark, s"$fixtureDir/TestInverted")
       .withColumnRenamed("file", "doc_id")
     val sparkIdx = TextOps.tokenize(df, idCol = "doc_id")
       .groupBy("word", "doc_id").count()
       .as[(String, String, Long)].collect()
       .map { case (w, f, c) => (w, f) -> c }.toMap
     // independent recount per file
-    val dir = java.nio.file.Paths.get(s"$refData/TestInverted")
+    val dir = java.nio.file.Paths.get(s"$fixtureDir/TestInverted")
     val expected = scala.collection.mutable.Map.empty[(String, String), Long]
     java.nio.file.Files.list(dir).forEach { p =>
       val txt = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
@@ -68,8 +66,8 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("resolve dispatches dir/file/string like the reference") {
-    assert(TextSources.resolve(spark, s"$refData/TestInverted").count() == 4)
-    assert(TextSources.resolve(spark, s"$refData/test.txt").count() > 1)
+    assert(TextSources.resolve(spark, s"$fixtureDir/TestInverted").count() == 4)
+    assert(TextSources.resolve(spark, s"$fixtureDir/test.txt").count() > 1)
     assert(TextSources.resolve(spark, "just an inline data string").count() == 1)
   }
 

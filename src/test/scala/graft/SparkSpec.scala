@@ -18,6 +18,11 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+  /** Hand-written text fixtures under src/test/resources: the
+    * four-file `TestInverted` corpus (3.txt is Portuguese, with
+    * multi-byte accented letters) and a multi-line `test.txt`. */
+  val fixtureDir: String =
+    new java.io.File(getClass.getResource("/test.txt").toURI).getParent
 }
 
 object SparkSpec {
